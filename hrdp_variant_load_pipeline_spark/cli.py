@@ -113,6 +113,13 @@ _LOAD_CONSTRAINTS = [
 
 
 def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
+    """--runLoad: one batch into both stores, then the run counters.
+
+    The counters come from the load's own actions (``load_metrics``): the
+    appends count what they write, so they are read after both appends.
+    The load's internal caches are released before returning — also when
+    the audit refuses the batch or an append fails — so no cache entry
+    outlives the run."""
     vcf = _vcf_input(spark, cfg)
     genes = spark.read.parquet(cfg["genes_path"])
     samples = samples_dimension(spark, cfg["samples"], cfg["map_key"])
@@ -120,44 +127,50 @@ def cmd_run_load(spark: SparkSession, cfg: dict) -> dict[str, int]:
     dstore = _read_store(spark, cfg["detail_store"], schemas.VARIANT_SAMPLE_DETAIL)
 
     res = run_load(vcf, genes, samples, vstore, dstore, map_key=cfg["map_key"])
-    out: dict[str, int] = {}
-    # optional batch audit BEFORE anything is appended — the stand-in for
-    # the Oracle schema's own constraints. "check": report counts;
-    # "strict": refuse the whole batch (one batch = one transaction, so
-    # refusing before the first append leaves both stores untouched).
-    mode = cfg.get("constraints")
-    if mode in ("check", "strict"):
-        from hrdp_variant_load_pipeline_spark.operators.quality import (
-            check_constraints,
-        )
-
-        report = check_constraints(res.new_variants, _LOAD_CONSTRAINTS).collect()
-        for r in report:
-            out[f"constraint[{r['rule']}]"] = int(r["violations"])
-        bad = [r for r in report if not r["ok"]]
-        if bad and mode == "strict":
-            res.release()
-            raise ValueError(
-                "load refused (constraints=strict): "
-                + ", ".join(f"{r['rule']}={r['violations']}" for r in bad)
+    try:
+        out: dict[str, int] = {}
+        # optional batch audit BEFORE anything is appended — the stand-in
+        # for the Oracle schema's own constraints. "check": report counts;
+        # "strict": refuse the whole batch (one batch = one transaction, so
+        # refusing before the first append leaves both stores untouched).
+        mode = cfg.get("constraints")
+        if mode in ("check", "strict"):
+            from hrdp_variant_load_pipeline_spark.operators.quality import (
+                check_constraints,
             )
-    # optional per-store append clustering, e.g. {"append_cluster_by":
-    # {"variant_store": ["chromosome", "start_pos"]}} — each batch's
-    # files then cover disjoint key ranges and genic-QC's range-scoped
-    # probes prune them via footer stats WITHOUT waiting for the next
-    # --compactStores pass (which applies the same clustering store-wide
-    # via compact_sort_by). Costs one batch-bounded range shuffle.
-    clu = cfg.get("append_cluster_by") or {}
-    append_to_store(
-        res.new_variants, cfg["variant_store"], cluster_by=clu.get("variant_store")
-    )
-    append_to_store(
-        res.new_sample_details,
-        cfg["detail_store"],
-        cluster_by=clu.get("detail_store"),
-    )
-    out.update(load_metrics(res))
-    return out
+
+            report = check_constraints(res.new_variants, _LOAD_CONSTRAINTS).collect()
+            for r in report:
+                out[f"constraint[{r['rule']}]"] = int(r["violations"])
+            bad = [r for r in report if not r["ok"]]
+            if bad and mode == "strict":
+                raise ValueError(
+                    "load refused (constraints=strict): "
+                    + ", ".join(f"{r['rule']}={r['violations']}" for r in bad)
+                )
+        # optional per-store append clustering, e.g. {"append_cluster_by":
+        # {"variant_store": ["chromosome", "start_pos"]}} — each batch's
+        # files then cover disjoint key ranges and genic-QC's range-scoped
+        # probes prune them via footer stats WITHOUT waiting for the next
+        # --compactStores pass (which applies the same clustering store-wide
+        # via compact_sort_by). Costs one batch-bounded range shuffle.
+        clu = cfg.get("append_cluster_by") or {}
+        append_to_store(
+            res.new_variants,
+            cfg["variant_store"],
+            cluster_by=clu.get("variant_store"),
+            observation=res.variants_observed,
+        )
+        append_to_store(
+            res.new_sample_details,
+            cfg["detail_store"],
+            cluster_by=clu.get("detail_store"),
+            observation=res.details_observed,
+        )
+        out.update(load_metrics(res))
+        return out
+    finally:
+        res.release()
 
 
 def _atomic_replace_store(df: DataFrame, store_path: str) -> None:

@@ -38,6 +38,22 @@ Faithfully-reproduced quirks (SURVEY.md §1.4, verified against the Java):
   out, HrdpVariants.java:121) — exposed here as the ``end_pos_updates``
   DataFrame, application left to the caller.
 
+Run counters (the reference's per-run log of variants entered / sample
+rows created / dedup hits, HrdpVariants.java:116-133) come out of work the
+load already does, never from a recount:
+
+* ``variants_entered`` / ``sample_details_entered``: one ``Observation``
+  per output (``LoadResult.variants_observed`` / ``details_observed``),
+  passed to the append that writes it (``append_to_store(...,
+  observation=)``), which counts the rows as it writes them;
+* ``existing_matched`` / ``end_pos_drift_detected``: one aggregate over
+  the persisted dedup frame inside ``run_load``. That action also fills
+  the cache every later pass reads, and it runs before any append, so a
+  store refresh cannot turn this run's new variants into "existing" ones.
+
+The counters are therefore valid only once both outputs have been
+written (see ``load_metrics``).
+
 Divergences from crash behavior (documented, not reproduced): unknown
 sample columns and null/zero depths crash the reference (NPE /
 ArithmeticException); here they drop the row / yield null.
@@ -45,9 +61,11 @@ ArithmeticException); here they drop the row / yield null.
 
 from __future__ import annotations
 
+import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from hrdp_variant_load_pipeline_spark.functions.normalize import (
@@ -65,16 +83,31 @@ LINE_KEY = ["source_file", "chromosome", "pos", "ref", "alt"]
 
 SPECIES_TYPE_KEY = 3  # rat (HrdpVariants.java:309)
 
+#: how long load_metrics waits for an append's observation to complete
+OBSERVATION_WAIT_S = 60.0
+
 
 @dataclass
 class LoadResult:
-    """Outputs of one load run (all lazy DataFrames)."""
+    """Outputs of one load run (all lazy DataFrames) plus its counters.
+
+    ``variants_observed`` / ``details_observed`` are unattached
+    observations; pass each to the append that writes ``new_variants`` /
+    ``new_sample_details`` (``append_to_store(..., observation=)``) and
+    it counts the rows written. ``existing_matched`` /
+    ``end_pos_drift_detected`` were aggregated inside ``run_load``, before
+    any append. Read all four through :func:`load_metrics`, which is
+    valid only after both appends."""
 
     new_variants: DataFrame  # VARIANT schema → variant + variant_map_data sinks
     end_pos_updates: DataFrame  # (rgd_id, end_pos) drift, detected-not-applied
     new_sample_details: DataFrame  # VARIANT_SAMPLE_DETAIL schema
     all_line_variants: DataFrame  # internal: new+existing per line (for QC/tests)
     cached: tuple = ()  # frames run_load persisted; released via release()
+    variants_observed: Observation | None = None
+    details_observed: Observation | None = None
+    existing_matched: int = 0  # line-alleles that matched a stored variant
+    end_pos_drift_detected: int = 0  # rows of end_pos_updates
 
     def release(self) -> None:
         """Unpersist the plan's internal caches. Call AFTER the outputs
@@ -259,6 +292,17 @@ def run_load(
     cache_registry: list = []
     matched = matched.withColumn("is_new", F.col("store_rgd_id").isNull()).persist()
     cache_registry.append(matched)
+    # dedup-hit counters: one aggregate that also fills the cache (the
+    # allocator's range pass below then reads it). Taken before any append:
+    # an append refreshes cached frames over the stores by path.
+    existing = ~F.col("is_new")
+    drift = existing & (F.col("store_end_pos") != F.col("end_pos")) & (
+        F.col("end_pos") != 0
+    )
+    hits = matched.agg(
+        F.count(F.when(existing, 1)).alias("existing"),
+        F.count(F.when(drift, 1)).alias("drift"),
+    ).collect()[0]
 
     # ---- intra-batch dedup of new variants --------------------------------
     # The reference inserts per line and RE-PROBES the DB for every later
@@ -322,14 +366,7 @@ def run_load(
     # occurrence), not one per line-allele
     new_variants = canon_ids.select(*variant_cols)
 
-    end_pos_updates = (
-        with_ids.filter(
-            ~F.col("is_new")
-            & (F.col("store_end_pos") != F.col("end_pos"))
-            & (F.col("end_pos") != 0)
-        )
-        .select(F.col("rgd_id"), F.col("end_pos"))
-    )
+    end_pos_updates = with_ids.filter(drift).select(F.col("rgd_id"), F.col("end_pos"))
 
     # ---- per-sample detail rows -------------------------------------------
     # j = position in the per-line new++existing list (new first, each in
@@ -428,6 +465,9 @@ def run_load(
         )
     )
 
+    # the appends count what they write (sources/store.py:append_to_store);
+    # names are unique per run, so loads in one session never clash
+    run_tag = uuid.uuid4().hex
     _ = spark
     return LoadResult(
         new_variants=new_variants,
@@ -435,16 +475,49 @@ def run_load(
         new_sample_details=details,
         all_line_variants=line_variants,
         cached=tuple(cache_registry),
+        variants_observed=Observation(f"load_variants_{run_tag}"),
+        details_observed=Observation(f"load_details_{run_tag}"),
+        existing_matched=int(hits["existing"]),
+        end_pos_drift_detected=int(hits["drift"]),
     )
+
+
+def _observed_rows(obs: Observation, output: str) -> int:
+    """Row count an output's observation took during its append.
+
+    Observations complete on the listener bus, a moment after the action
+    returns; an output that was never written never completes, and
+    ``Observation.get`` would then block forever — so wait a bounded time
+    on the JVM future, then fail loudly."""
+    if obs._jo is None:  # never attached to a write
+        raise RuntimeError(
+            f"load_metrics: {output} was not appended with its observation"
+        )
+    future = obs._jo.future()
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
+    while not future.isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"load_metrics: {output} has not been written; read the "
+                "counters after both appends"
+            )
+        time.sleep(0.005)
+    return int(obs.get["rows"])
 
 
 def load_metrics(result: LoadResult) -> dict[str, int]:
     """Run counters (A1): the reference logs variants entered / sample rows
-    created / dedup hits per run (HrdpVariants.java:116-133). One aggregate
-    per output instead of incrementing driver-side counters in a loop."""
+    created / dedup hits per run (HrdpVariants.java:116-133), incrementing
+    them as it inserts. Here they are read, not recomputed: the two output
+    counts from the observations their appends filled, the dedup hits from
+    ``run_load``'s own aggregate. Starts no Spark job. Valid only after
+    BOTH outputs were appended with their observations; raises
+    ``RuntimeError`` if either was not (after ``OBSERVATION_WAIT_S``)."""
     return {
-        "variants_entered": result.new_variants.count(),
-        "sample_details_entered": result.new_sample_details.count(),
-        "existing_matched": result.all_line_variants.filter(~F.col("is_new")).count(),
-        "end_pos_drift_detected": result.end_pos_updates.count(),
+        "variants_entered": _observed_rows(result.variants_observed, "new_variants"),
+        "sample_details_entered": _observed_rows(
+            result.details_observed, "new_sample_details"
+        ),
+        "existing_matched": result.existing_matched,
+        "end_pos_drift_detected": result.end_pos_drift_detected,
     }

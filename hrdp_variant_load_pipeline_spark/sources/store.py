@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 _VERSION_RE = re.compile(r"^v_(\d{8})$")
 COMMIT_MARKER = "_COMMITTED"
@@ -277,6 +277,7 @@ def append_to_store(
     allow_schema_drift: bool = False,
     cluster_by: list[str] | None = None,
     cluster_partitions: int | None = None,
+    observation: Observation | None = None,
 ) -> str:
     """Append rows to the CURRENT store location (version dir when the
     store is versioned, the root for legacy/new flat stores). Appends are
@@ -300,6 +301,11 @@ def append_to_store(
     shuffle map stages, so a derived batch (e.g. the ingest's
     shingle/minhash index rows) would execute twice per append.
 
+    ``observation`` counts the rows this append writes (metric ``rows``)
+    in the write job itself, at no extra job. It is attached above the
+    clustering: below it, the range shuffle's sampling pass would count
+    every row a second time.
+
     Appending a DIFFERENT schema into an existing location is refused:
     Spark's default parquet read infers from one footer, so a drifted
     append would silently drop (or null out) columns depending on which
@@ -313,6 +319,8 @@ def append_to_store(
         else:
             df = df.repartitionByRange(*cluster_by)
         df = df.sortWithinPartitions(*cluster_by)
+    if observation is not None:
+        df = df.observe(observation, F.count(F.lit(1)).alias("rows"))
     target = resolve_store(spark, root) or root.rstrip("/")
     fs, jvm = _fs(spark, target)
     if not allow_schema_drift and fs.exists(_jpath(jvm, target)):

@@ -50,6 +50,9 @@ def stream_vcf_loader(
     the current stores, append the new rows. Call
     ``query.processAllAvailable()`` to drain synchronously in tests.
 
+    ``on_batch(batch_id, result)`` runs after both appends, so it may read
+    the batch's counters with ``plans.load.load_metrics(result)``.
+
     ``max_files_per_trigger`` bounds a micro-batch to that many newly-seen
     files: a bulk landing (weeks of backlog, a re-drop of the whole corpus)
     is then worked off as several bounded batches instead of one giant one
@@ -88,8 +91,12 @@ def stream_vcf_loader(
         dstore = _read_store(spark, detail_store_dir, schemas.VARIANT_SAMPLE_DETAIL)
         res = run_load(vcf, genes, samples, vstore, dstore, map_key)
         try:
-            append_to_store(res.new_variants, variant_store_dir)
-            append_to_store(res.new_sample_details, detail_store_dir)
+            append_to_store(
+                res.new_variants, variant_store_dir, observation=res.variants_observed
+            )
+            append_to_store(
+                res.new_sample_details, detail_store_dir, observation=res.details_observed
+            )
             if on_batch is not None:
                 on_batch(batch_id, res)
         finally:

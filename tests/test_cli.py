@@ -490,3 +490,123 @@ def test_cli_146_sample_production_shape(spark, tmp_path):
     # first QC pass repairs the loader/QC multi-allelic probe divergence
     # (a faithful reference quirk), second is a fixpoint
     assert out["genic_qc_fixpoint_metrics"]["genic_status_updated"] == 0
+
+
+FILE_B = """##fileformat=VCFv4.2
+#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS2
+chr1\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:5,5:10
+chr1\t700\t.\tT\tC\t50\tPASS\t.\tGT:AD:DP\t0/1:4,6:10
+"""
+
+COUNTERS = ("variants_entered", "sample_details_entered", "existing_matched")
+
+
+def _load_cfg(spark, tmp_path, **extra):
+    vdir = tmp_path / "vcfs"
+    vdir.mkdir()
+    genes_path = str(tmp_path / "genes")
+    spark.createDataFrame(
+        [(1, "1", 50, 150, "ACTIVE", 372)], schemas.GENE
+    ).write.parquet(genes_path)
+    return vdir, {
+        "map_key": 372,
+        "input_dir": str(vdir),
+        "samples": {"S1": 1, "S2": 2},
+        "genes_path": genes_path,
+        "variant_store": str(tmp_path / "variants"),
+        "detail_store": str(tmp_path / "details"),
+        **extra,
+    }
+
+
+def _counters(m):
+    return tuple(m[k] for k in COUNTERS)
+
+
+def test_cli_load_counters_on_non_empty_store(spark, tmp_path):
+    """The counters describe THIS run even when the stores already hold
+    rows: a second file's new variant is entered, not miscounted as a
+    dedup hit of itself."""
+    from hrdp_variant_load_pipeline_spark.sources.store import read_store
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted()
+    vdir, cfg = _load_cfg(spark, tmp_path)
+    with gzip.open(vdir / "A_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF)
+    assert _counters(cmd_run_load(spark, cfg)) == (2, 2, 0)
+
+    with gzip.open(vdir / "B_Y_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(FILE_B)
+    # B's chr1:100 and both of A's lines match; chr1:700 is new
+    assert _counters(cmd_run_load(spark, cfg)) == (1, 2, 3)
+    assert _counters(cmd_run_load(spark, cfg)) == (0, 0, 4)  # idempotent
+
+    assert read_store(spark, cfg["variant_store"]).count() == 3
+    assert read_store(spark, cfg["detail_store"]).count() == 4
+    # the load's caches do not outlive the run (other tests' entries may
+    # be cleaned meanwhile, so only look for new ones)
+    assert not persisted() - before
+
+
+def test_cli_load_counters_constraints_check_match_default(spark, tmp_path):
+    """The audit action reads new_variants before the append; the counters
+    still come from the appends, same as the default mode."""
+    vdir, cfg = _load_cfg(spark, tmp_path, constraints="check")
+    with gzip.open(vdir / "A_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF)
+    assert _counters(cmd_run_load(spark, cfg)) == (2, 2, 0)
+    with gzip.open(vdir / "B_Y_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(FILE_B)
+    m = cmd_run_load(spark, cfg)
+    assert _counters(m) == (1, 2, 3)
+    assert m["constraint[unique(rgd_id)]"] == 0
+
+
+def test_cli_load_counters_batch_without_surviving_rows(spark, tmp_path):
+    """Empty outputs still fill their observations: unplaced contigs only
+    give all-zero counters; hom-ref / no-call cells only give variants but
+    no sample rows. Neither raises nor blocks."""
+    vdir, cfg = _load_cfg(spark, tmp_path)
+    header = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
+    with gzip.open(vdir / "A_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(
+            header
+            + "chrUn_scaffold_1\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:5,5:10\n"
+            + "chr1_unplaced\t400\t.\tC\tT\t50\tPASS\t.\tGT:AD:DP\t1/1:0,9:9\n"
+        )
+    m = cmd_run_load(spark, cfg)
+    assert _counters(m) + (m["end_pos_drift_detected"],) == (0, 0, 0, 0)
+
+    with gzip.open(vdir / "B_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(
+            header
+            + "chr1\t900\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/0:9,0:9\n"
+            + "chr1\t950\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t./.:0,0:0\n"
+        )
+    assert _counters(cmd_run_load(spark, cfg)) == (2, 0, 0)
+
+
+def test_load_observation_names_unique_per_run(spark, tmp_path):
+    """Two loads in one session get distinct observation names, so one
+    plan never holds two metric definitions of the same name."""
+    from hrdp_variant_load_pipeline_spark.plans.load import run_load
+    from hrdp_variant_load_pipeline_spark.sources.vcf import read_vcf
+
+    vdir, cfg = _load_cfg(spark, tmp_path)
+    with gzip.open(vdir / "A_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF)
+    genes = spark.read.parquet(cfg["genes_path"])
+    samples = spark.createDataFrame([], schemas.SAMPLE)
+    empty_v = spark.createDataFrame([], schemas.VARIANT)
+    empty_d = spark.createDataFrame([], schemas.VARIANT_SAMPLE_DETAIL)
+    runs = [
+        run_load(read_vcf(spark, str(vdir)), genes, samples, empty_v, empty_d, 372)
+        for _ in range(2)
+    ]
+    names = {o._name for r in runs for o in (r.variants_observed, r.details_observed)}
+    for r in runs:
+        r.release()
+    assert len(names) == 4

@@ -190,6 +190,9 @@ def test_end_pos_drift_detected(spark, vcf_dir, dims):
     updates = {r["rgd_id"]: r["end_pos"] for r in res.end_pos_updates.collect()}
     orig = {r["rgd_id"]: r["end_pos"] for r in first.new_variants.collect()}
     assert updates == orig
+    # run_load's own dedup-hit counters agree with the lazy outputs
+    assert res.existing_matched == 5
+    assert res.end_pos_drift_detected == res.end_pos_updates.count()
 
 
 def test_genic_qc_drift(spark, vcf_dir, dims):
@@ -222,13 +225,25 @@ def test_genic_qc_drift(spark, vcf_dir, dims):
     assert lower_updates == {i: "INTERGENIC" for i in mt_ids}
 
 
-def test_load_metrics(spark, vcf_dir, dims):
+def test_load_metrics(spark, vcf_dir, dims, tmp_path):
+    """The counters are read from the appends that write the outputs, so
+    the outputs are appended first; unwritten outputs raise, not block."""
     from hrdp_variant_load_pipeline_spark.plans.load import load_metrics
+    from hrdp_variant_load_pipeline_spark.sources.store import append_to_store
 
     res = run(spark, vcf_dir, dims)
+    with pytest.raises(RuntimeError, match="new_variants"):
+        load_metrics(res)
+    append_to_store(
+        res.new_variants, str(tmp_path / "v"), observation=res.variants_observed
+    )
+    append_to_store(
+        res.new_sample_details, str(tmp_path / "d"), observation=res.details_observed
+    )
     m = load_metrics(res)
+    res.release()
     assert m["variants_entered"] == 5
-    assert m["sample_details_entered"] == res.new_sample_details.count()
+    assert m["sample_details_entered"] == spark.read.parquet(str(tmp_path / "d")).count()
     assert m["existing_matched"] == 0  # empty store
     assert m["end_pos_drift_detected"] == 0
 

@@ -6,6 +6,7 @@ import gzip
 import os
 
 from hrdp_variant_load_pipeline_spark import schemas
+from hrdp_variant_load_pipeline_spark.plans.load import load_metrics
 from hrdp_variant_load_pipeline_spark.streaming.vcf_stream import stream_vcf_loader
 
 HEADER = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
@@ -110,7 +111,7 @@ def test_streaming_max_files_per_trigger_bounds_batches(spark, tmp_path):
     query = stream_vcf_loader(
         spark, vdir, genes, samples, vstore, dstore, map_key=372,
         checkpoint_dir=ckpt,
-        on_batch=lambda bid, res: batches.append(bid),
+        on_batch=lambda bid, res: batches.append(load_metrics(res)),
         max_files_per_trigger=1,
     )
     try:
@@ -118,6 +119,10 @@ def test_streaming_max_files_per_trigger_bounds_batches(spark, tmp_path):
     finally:
         query.stop()
     assert len(batches) == 3, f"expected 3 bounded batches, got {batches}"
+    # each batch's counters come from its own appends: one new line each
+    assert [(m["variants_entered"], m["sample_details_entered"]) for m in batches] == [
+        (1, 1)
+    ] * 3
     stored = spark.read.parquet(vstore)
     assert stored.count() == 3
     assert stored.select("rgd_id").distinct().count() == 3
