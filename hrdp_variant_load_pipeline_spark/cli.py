@@ -207,17 +207,33 @@ def cmd_compact(spark: SparkSession, cfg: dict) -> dict[str, int]:
 
 
 def cmd_genic_qc(spark: SparkSession, cfg: dict) -> dict[str, int]:
+    """--genicQc: recompute genic status, rewrite the store if any drifted.
+
+    The drift set is computed ONCE: ``genic_qc`` keeps its merged scope
+    persisted until the drift set is materialized, the drift set is
+    persisted and counted, and the rewrite reads it from the cache — the
+    VCF scope scan and the interval probe never run again for the
+    rewrite. Everything held is released before returning, also when the
+    rewrite fails."""
     genes = spark.read.parquet(cfg["genes_path"])
     store = read_store(spark, cfg["variant_store"], schemas.VARIANT)
     scope = None
     if cfg.get("input_dir"):
         scope = scope_from_vcf(_vcf_input(spark, cfg))
-    updates = genic_qc(store, genes, map_key=cfg["map_key"], scope=scope)
-    n = updates.count()
-    if n:
-        repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
-        _atomic_replace_store(repaired, cfg["variant_store"])
-    return {"genic_status_updated": n}
+    held: list[DataFrame] = []
+    try:
+        updates = genic_qc(
+            store, genes, map_key=cfg["map_key"], scope=scope, cache_registry=held
+        ).persist()
+        held.append(updates)
+        n = updates.count()
+        if n:
+            repaired = merge_update(store, updates, "rgd_id", ["genic_status"])
+            _atomic_replace_store(repaired, cfg["variant_store"])
+        return {"genic_status_updated": n}
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def cmd_run_corpus(spark: SparkSession, cfg: dict) -> dict:

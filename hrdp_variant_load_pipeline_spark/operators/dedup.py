@@ -23,6 +23,8 @@ import threading
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hrdp_variant_load_pipeline_spark.session import parse_count
+
 #: serializes every registry-diff window in this module: the diff
 #: attributes "RDDs that appeared since the snapshot" to the current call,
 #: so two concurrent diffing calls (or one racing a persist from another
@@ -548,7 +550,10 @@ def connected_components(
         # satisfies each round's join requirement. On the shallow
         # (1-round) in-repo fixtures this is cost-neutral; on deep
         # components it is paid back every round.
-        sp = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        sp = parse_count(
+            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"),
+            sc.defaultParallelism,
+        )
         edges = (
             pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
             .unionByName(

@@ -8,12 +8,18 @@ predicate is the literal 3-disjunct form — reproduced exactly here because
 the loader probes it with inverted intervals (end=0) on multi-allelic
 lines, where it is NOT equivalent to standard interval overlap.
 
-Spark design, two physical strategies:
+Spark design, three physical strategies:
 
 * ``interval_join`` — broadcast-hash join on the equi key (chromosome) with
   the range predicate as residual filter. Right side (genes) is
   dimension-sized → broadcast; each probe row is checked against the genes
   of its chromosome only. Good to ~10^4 intervals per chromosome.
+
+* ``with_exists_flag`` — the genic flag itself: one broadcast row per
+  chromosome holding that chromosome's intervals indexed by fixed
+  ``BIN_SIZE`` bins, so each probe tests only the intervals of the bins it
+  covers, not every interval of its chromosome. The probe side is scanned
+  once and never shuffled.
 
 * ``interval_join_binned`` — the 100 TB scale path: both sides gain a
   ``bin = floor(pos / bin_size)`` key (intervals explode into every bin
@@ -28,6 +34,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: genomic bin width of the binned strategies (1 Mb)
+BIN_SIZE = 1_000_000
+
+
+def _bin(pos: Column, bin_size: int = BIN_SIZE) -> Column:
+    # floor, not cast-truncate: truncation mis-bins negative coordinates
+    return F.floor(pos / bin_size).cast("long")
 
 
 def overlap_predicate(
@@ -76,45 +90,96 @@ def with_exists_flag(
 ) -> DataFrame:
     """Add a boolean column: does any interval overlap this probe?
 
-    SINGLE-PASS: intervals are aggregated into one (chromosome,
-    array<struct<s,e>>) row per chromosome (a dimension-sized shuffle),
-    broadcast, and left-joined on the chromosome equi key — one row per
-    chromosome means zero probe-row duplication — then the flag is a
-    row-local ``exists`` over the interval array. The probe side is
-    scanned exactly ONCE with no exchange.
+    SINGLE-PASS: intervals are aggregated into one row per chromosome (a
+    dimension-sized shuffle), broadcast, and left-joined on the chromosome
+    equi key — one row per chromosome means zero probe-row duplication —
+    then the flag is a row-local ``exists``. The probe side is scanned
+    exactly ONCE with no exchange.
 
-    (The round-1 semi ∪ anti formulation was also shuffle-free but
-    evaluated the probe side TWICE — a double scan of the full probe
-    table unless every caller remembered to persist first. Same
-    per-chromosome-fits-in-memory assumption as ``interval_join``'s
-    broadcast; use ``interval_join_binned`` past ~10^4 intervals per
-    chromosome.)
+    The chromosome's row is a bin index: ``__bins[b - __first]`` holds the
+    intervals touching ``BIN_SIZE`` bin ``b``, for every bin from the
+    chromosome's first to its last (empty where no interval falls). An
+    interval is placed in each bin from ``bin(min(s, e))`` to
+    ``bin(max(s, e))``; a probe tests the ``overlap_predicate`` against the
+    intervals of bins ``bin(min(q_start, q_stop))`` to
+    ``bin(max(q_start, q_stop))``, clamped to the index. A point probe
+    therefore tests one bin's intervals, not the whole chromosome's.
+
+    Exact for the 3-disjunct predicate on ANY input, not only well-formed
+    intervals: each disjunct that holds puts a point in both
+    ``[min(q_start, q_stop), max(q_start, q_stop)]`` and
+    ``[min(s, e), max(s, e)]`` — ``left`` / ``right`` put ``s`` / ``e``
+    inside the probe's range; ``contained`` (``s <= q_start``,
+    ``q_stop <= e``) makes the two ranges overlap — so the two ranges
+    share a bin. The loader's inverted multi-allelic probe (``q_stop=0``)
+    simply covers bins 0..bin(q_start). An interval with one null end can
+    only match through the disjunct of its other end, and ``least`` /
+    ``greatest`` skip nulls, so it sits in that end's bin; null probes and
+    chromosomes without intervals flag False.
     """
     p_chrom, p_start, p_stop = probe_keys
     i_chrom, i_start, i_stop = interval_keys
-    per_chrom = intervals.groupBy(F.col(i_chrom).alias("__ichrom")).agg(
-        F.collect_list(
-            F.struct(F.col(i_start).alias("s"), F.col(i_stop).alias("e"))
-        ).alias("__ivs")
+    per_bin = (
+        intervals.select(
+            F.col(i_chrom).alias("__ichrom"),
+            F.struct(F.col(i_start).alias("s"), F.col(i_stop).alias("e")).alias("iv"),
+            F.explode(
+                F.sequence(
+                    _bin(F.least(i_start, i_stop)), _bin(F.greatest(i_start, i_stop))
+                )
+            ).alias("bin"),
+        )
+        .groupBy("__ichrom", "bin")
+        .agg(F.collect_list("iv").alias("ivs"))
+    )
+    no_ivs = F.array().cast(per_bin.schema["ivs"].dataType)
+    per_chrom = (
+        per_bin.groupBy("__ichrom")
+        .agg(
+            F.min("bin").alias("__first"),
+            F.max("bin").alias("__last"),
+            F.map_from_entries(F.collect_list(F.struct("bin", "ivs"))).alias("__m"),
+        )
+        .select(
+            "__ichrom",
+            "__first",
+            F.transform(
+                F.sequence("__first", "__last"),
+                lambda b: F.coalesce(F.col("__m")[b], no_ivs),
+            ).alias("__bins"),
+        )
     )
     joined = probes.join(
         F.broadcast(per_chrom), F.col(p_chrom) == F.col("__ichrom"), "left"
     )
+    first = F.col("__first")
+    last = first + F.size("__bins") - 1
+    lo = F.greatest(_bin(F.least(p_start, p_stop)), first)
+    hi = F.least(_bin(F.greatest(p_start, p_stop)), last)
+    # 1-based slice start capped at size + 1 (an empty slice) and a
+    # non-negative length keep both int-sized for any probe coordinate
+    candidates = F.flatten(
+        F.slice(
+            "__bins",
+            (F.least(lo, last + 1) - first + 1).cast("int"),
+            F.greatest(hi - lo + 1, F.lit(0)).cast("int"),
+        )
+    )
     hit = F.exists(
-        "__ivs",
+        candidates,
         lambda iv: overlap_predicate(
             F.col(p_start), F.col(p_stop), iv["s"], iv["e"]
         ),
     )
     return joined.withColumn(flag, F.coalesce(hit, F.lit(False))).drop(
-        "__ichrom", "__ivs"
+        "__ichrom", "__first", "__bins"
     )
 
 
 def interval_join_binned(
     probes: DataFrame,
     intervals: DataFrame,
-    bin_size: int = 1_000_000,
+    bin_size: int = BIN_SIZE,
     probe_keys: tuple[str, str, str] = ("chromosome", "q_start", "q_stop"),
     interval_keys: tuple[str, str, str] = ("chromosome", "start_pos", "stop_pos"),
     distinct_pairs: bool = True,
@@ -130,14 +195,10 @@ def interval_join_binned(
     i_chrom, i_start, i_stop = interval_keys
 
     def binned(df, chrom, lo, hi, prefix):
-        # floor, not cast-truncate: truncation mis-bins negative coordinates
         return df.withColumn(
             f"{prefix}bin",
             F.explode(
-                F.sequence(
-                    F.floor(F.col(lo) / bin_size).cast("long"),
-                    F.floor(F.col(hi) / bin_size).cast("long"),
-                )
+                F.sequence(_bin(F.col(lo), bin_size), _bin(F.col(hi), bin_size))
             ),
         )
 

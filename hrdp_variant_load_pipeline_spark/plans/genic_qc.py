@@ -9,9 +9,18 @@ whose status drifted (case-insensitive compare).
 
 Spark design: recompute genic status for the WHOLE variant table with one
 broadcast interval join + a filtered compare — no per-line loop, no range
-re-fetch. An optional ``scope`` DataFrame (chromosome, lo, hi) restricts
-the recompute to ranges touched by a given VCF batch, reproducing the
-reference's visit set.
+re-fetch. The gene probe is ``with_exists_flag``'s 1 Mb bin index, so a
+stored variant is compared with the genes of its own bin, not with every
+gene of its chromosome (the reference's ``GeneCache`` linear scan). An
+optional ``scope`` DataFrame (chromosome, lo, hi) restricts the recompute
+to ranges touched by a given VCF batch, reproducing the reference's visit
+set.
+
+The result is the drift set, a lazy frame. ``cli.cmd_genic_qc`` computes
+it once: it passes ``cache_registry`` so the merged scope stays cached
+until the drift set is materialized, persists the drift set, counts it,
+and lets ``merge_update`` + the versioned store rewrite read the cached
+rows — the scope scan, the merge and the interval probe each run once.
 """
 
 from __future__ import annotations
@@ -116,8 +125,11 @@ def genic_qc(
 
     ``cache_registry``: when given, the persisted merged-scope frame is
     appended for the caller to release AFTER materializing the result
-    (``run_load``'s protocol); otherwise it is released immediately and
-    the merge recomputes once in the final job.
+    (``run_load``'s protocol), so the first action on the result reads the
+    merge from the cache. Without it the merge is released immediately and
+    every action on the result recomputes the scope scan and the merge;
+    ``cli.cmd_genic_qc`` passes a registry and persists the result, so it
+    computes the drift set once for both its count and the store rewrite.
     """
     variants = variant_store.filter(F.col("map_key") == map_key)
     if scope is not None:

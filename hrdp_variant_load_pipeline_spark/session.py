@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def parse_count(value: str | None, default: int) -> int:
+    """A count-valued setting as an int, ``default`` when it is not a
+    plain non-negative integer (``"*"``, ``"auto"``, unset)."""
+    return int(value) if value and value.isdigit() else default
+
+
+def local_cores() -> tuple[str, int]:
+    """``SPARK_GRAFT_CPUS`` (default ``"32"``) as the local master string
+    and the default shuffle-partition count: ``"4"`` → ``local[4]`` / 4,
+    ``"*"`` → ``local[*]`` / 32."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return f"local[{cpus}]", parse_count(cpus, 32)
+
+
 def get_spark(
     app_name: str = "hrdp_variant_load_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -26,12 +40,12 @@ def get_spark(
     caller can override any default (the shuffle-audit tool re-enables
     the UI this way to read per-stage exchange metrics).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master, default_sp = local_cores()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = default_sp
 
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -122,10 +136,8 @@ def tune_for_input(spark: SparkSession, input_dir: str) -> dict[str, str]:
     Both knobs are runtime-settable so the switch is safe mid-session.
     Returns the settings applied (for logging/tests).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    default_sp = int(cpus) if cpus.isdigit() else 32
     size = _dir_bytes(input_dir, cap=MEDIUM_INPUT_BYTES)
-    conf = _profile_for_size(size, default_sp)
+    conf = _profile_for_size(size, local_cores()[1])
     for k, v in conf.items():
         spark.conf.set(k, v)
     return conf
@@ -148,8 +160,6 @@ def tune_for_tables(
     """
     if tables is None:
         return tune_for_input(spark, input_dir)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    default_sp = int(cpus) if cpus.isdigit() else 32
     size = 0
     for t in tables:
         path = os.path.join(input_dir, f"{t}.parquet")
@@ -170,7 +180,7 @@ def tune_for_tables(
         size += _dir_bytes(path, cap=MEDIUM_INPUT_BYTES)
         if size >= MEDIUM_INPUT_BYTES:
             break
-    conf = _profile_for_size(size, default_sp)
+    conf = _profile_for_size(size, local_cores()[1])
     for k, v in conf.items():
         spark.conf.set(k, v)
     return conf

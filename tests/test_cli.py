@@ -610,3 +610,115 @@ def test_load_observation_names_unique_per_run(spark, tmp_path):
     for r in runs:
         r.release()
     assert len(names) == 4
+
+
+def _qc_cfg(spark, tmp_path):
+    """A --genicQc config over the VCF scope (chr1:100, chr1:400) and a
+    versioned store: chr1:100 lies in the gene but is stored INTERGENIC
+    (drift), chr1:400 is right, chr1:700 is outside the scope."""
+    from hrdp_variant_load_pipeline_spark.sources.store import commit_store_version
+
+    vdir, cfg = _load_cfg(spark, tmp_path)
+    with gzip.open(vdir / "A_X_2020_v1_PASS.vcf.gz", "wt") as f:
+        f.write(VCF)
+    rows = [
+        (i, "A", "G", None, None, "snv", 3, "1", None, pos, pos, status, 372)
+        for i, pos, status in [(1, 100, "INTERGENIC"), (2, 400, "INTERGENIC"),
+                               (3, 700, "GENIC")]
+    ]
+    commit_store_version(
+        spark.createDataFrame(rows, schemas.VARIANT), cfg["variant_store"]
+    )
+    return cfg
+
+
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _plan_nodes(plan):
+    """Every physical node of an executed plan, adaptive stages and
+    reused exchanges included (cached relations are leaves)."""
+    nodes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif kind == "ReusedExchangeExec":
+            todo.append(node.child())
+        todo.extend(_seq(node.children()))
+    return nodes
+
+
+def test_cli_genic_qc_releases_caches(spark, tmp_path, monkeypatch):
+    """A failed rewrite, a drifting run and a fixpoint run each leave the
+    session's persisted RDDs as they found them; the fixpoint commits no
+    new store version."""
+    import pytest
+
+    from hrdp_variant_load_pipeline_spark import cli
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    def versions():
+        return sorted(p.name for p in (tmp_path / "variants").glob("v_*"))
+
+    cfg = _qc_cfg(spark, tmp_path)
+    # other tests' entries may be cleaned meanwhile: look for new ones only
+    before = persisted()
+
+    def refuse(df, root):
+        raise RuntimeError("store unavailable")
+
+    with monkeypatch.context() as m:
+        m.setattr(cli, "commit_store_version", refuse)
+        with pytest.raises(RuntimeError, match="store unavailable"):
+            cmd_genic_qc(spark, cfg)
+    assert not persisted() - before
+
+    assert cmd_genic_qc(spark, cfg) == {"genic_status_updated": 1}
+    assert not persisted() - before
+    committed = versions()
+
+    assert cmd_genic_qc(spark, cfg) == {"genic_status_updated": 0}
+    assert not persisted() - before
+    assert versions() == committed
+
+
+def test_cli_genic_qc_rewrite_reads_cached_drift_set(spark, tmp_path, monkeypatch):
+    """The store rewrite reads the drift set the count materialized: its
+    executed plan scans the cache and never the VCF text again."""
+    from hrdp_variant_load_pipeline_spark import cli
+
+    cfg = _qc_cfg(spark, tmp_path)
+    plans = []
+    commit = cli.commit_store_version
+
+    def inspect_then_commit(df, root):
+        df.collect()
+        plans.append(df._jdf.queryExecution().executedPlan())
+        return commit(df, root)
+
+    monkeypatch.setattr(cli, "commit_store_version", inspect_then_commit)
+    assert cmd_genic_qc(spark, cfg) == {"genic_status_updated": 1}
+    (plan,) = plans
+    nodes = _plan_nodes(plan)
+    cached = [
+        n for n in nodes if n.getClass().getSimpleName() == "InMemoryTableScanExec"
+    ]
+    outputs = [sorted(a.name() for a in _seq(n.output())) for n in cached]
+    assert ["genic_status", "rgd_id"] in outputs
+    text_scans = [
+        n
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.relation().fileFormat().getClass().getSimpleName() == "TextFileFormat"
+    ]
+    assert not text_scans

@@ -144,6 +144,24 @@ def test_connected_components_chain_and_star(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
+def test_connected_components_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """A platform may report spark.sql.shuffle.partitions as "auto"; the
+    edge partitioning then falls back to the default parallelism."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *a, **kw):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *a, **kw)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
+    out = {r["doc"]: r["cluster"] for r in connected_components(pairs).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
 def test_merge_update_duplicate_update_keys_no_fanout(spark):
     """Duplicate keys in the update set must NOT fan out store rows (that
     would duplicate the store after overwrite); the max set-col tuple per

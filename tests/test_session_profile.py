@@ -120,3 +120,24 @@ def test_tune_for_tables_missing_table_falls_back(spark, tmp_path):
     # the dir holds > MEDIUM_INPUT_BYTES, so the fallback picks the
     # cluster profile — the opposite of the 0-byte small-profile cliff
     assert conf["spark.sql.adaptive.enabled"] == "true"
+
+
+@pytest.mark.parametrize(
+    "cpus, master, default_sp",
+    [("4", "local[4]", 4), ("32", "local[32]", 32), ("*", "local[*]", 32)],
+)
+def test_local_cores_keeps_master_and_default_partitions(
+    monkeypatch, cpus, master, default_sp
+):
+    """One parse of SPARK_GRAFT_CPUS feeds get_spark's master and shuffle
+    default and both tune_* cluster profiles."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    assert sess.local_cores() == (master, default_sp)
+    cluster = sess._profile_for_size(sess.MEDIUM_INPUT_BYTES, default_sp)
+    assert cluster["spark.sql.shuffle.partitions"] == str(default_sp)
+
+
+def test_parse_count_falls_back_on_non_numeric():
+    assert sess.parse_count("12", 7) == 12
+    for value in ("auto", "*", "", None, "-1"):
+        assert sess.parse_count(value, 7) == 7
